@@ -5,8 +5,9 @@ idempotency."""
 import json
 import os
 import shutil
+from functools import reduce
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zellige_spark import io_geojson
@@ -14,13 +15,19 @@ from zellige_spark.operators import feature_tiles as FT
 
 SMALL = "/root/reference/test/integration/small.json"
 T10056 = "/root/reference/test/integration/10056.json"
+DATA = os.path.join(os.path.dirname(__file__), "data")
+# committed line + polygon fixtures, plus the reference integration
+# inputs wherever that checkout is present
+GEOJSON_INPUTS = [os.path.join(DATA, "lines.geojson"),
+                  os.path.join(DATA, "polygons.geojson"),
+                  *(p for p in (SMALL, T10056) if os.path.exists(p))]
 
 
 def _mixed_features(spark):
     """Line + polygon fixtures with globally unique fids (a total order,
     so grouped and streaming paths see the same feature sequence)."""
-    feats = io_geojson.read_geojson(spark, SMALL).unionByName(
-        io_geojson.read_geojson(spark, T10056))
+    feats = reduce(DataFrame.unionByName,
+                   (io_geojson.read_geojson(spark, p) for p in GEOJSON_INPUTS))
     w = Window.orderBy("geom_type", "props_json")
     return feats.withColumn("fid", F.row_number().over(w).cast("long"))
 
@@ -43,7 +50,7 @@ def test_feature_tiles_streaming_matches_grouped(spark):
 
 
 def test_read_geojson_distributed_parity(spark):
-    for path in (SMALL, T10056):
+    for path in GEOJSON_INPUTS:
         drv = {(r["fid"], r["geom_type"], json.dumps(r["parts"]), r["props_json"])
                for r in io_geojson.read_geojson(spark, path).collect()}
         dist = {(r["fid"], r["geom_type"], json.dumps(r["parts"]), r["props_json"])

@@ -2,6 +2,8 @@
 count stays O(n) at ~1e5 vectors), the self-verifying ANN recall
 column, and small-corpus behavior preservation."""
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -109,13 +111,21 @@ def test_ann_recall_column_truthful(spark, qname):
 # ---------------------------------------------------------------------------
 
 def _mixed_features(spark):
-    from pyspark.sql import Window
+    """Committed line + polygon fixtures, plus the reference integration
+    inputs wherever that checkout is present."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, Window
     from zellige_spark import io_geojson
 
-    feats = io_geojson.read_geojson(
-        spark, "/root/reference/test/integration/small.json").unionByName(
-        io_geojson.read_geojson(
-            spark, "/root/reference/test/integration/10056.json"))
+    data = os.path.join(os.path.dirname(__file__), "data")
+    reference = ("/root/reference/test/integration/small.json",
+                 "/root/reference/test/integration/10056.json")
+    paths = [os.path.join(data, "lines.geojson"),
+             os.path.join(data, "polygons.geojson"),
+             *(p for p in reference if os.path.exists(p))]
+    feats = reduce(DataFrame.unionByName,
+                   (io_geojson.read_geojson(spark, p) for p in paths))
     w = Window.orderBy("geom_type", "props_json")
     return feats.withColumn("fid", F.row_number().over(w).cast("long"))
 
