@@ -3,8 +3,10 @@
     python scripts/build_pyfiles.py [out.zip]
     spark-submit --py-files dist/zellige_spark.zip your_job.py
 
-The package is pure Python (numpy/pandas only at runtime), so one zip
-is the whole deployment unit for multi-executor clusters.
+The zip is not committed: build it from the checkout before every
+submit, so it never lags the package.  The package is pure Python
+(numpy/pandas only at runtime), so one zip is the whole deployment unit
+for multi-executor clusters.
 """
 
 from __future__ import annotations

@@ -1,7 +1,10 @@
 """spark-submit entry point: the flagship pipeline as a cluster job.
 
+    python scripts/build_pyfiles.py        # builds dist/zellige_spark.zip
     spark-submit --master <master> --py-files dist/zellige_spark.zip \
         scripts/submit_job.py --sf-dir /root/testdata/sf0.001 --out /tmp/out
+
+The zip is not committed; build it first, from the same checkout.
 
 Imports resolve from the shipped zip (no repo checkout on the
 executors), runs tile assignment -> streaming MVT assembly plus an S2

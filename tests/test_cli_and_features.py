@@ -42,9 +42,36 @@ def test_cli_reproduces_reference_golden(tmp_path):
     assert out.read_bytes() == open(GOLDEN, "rb").read()
 
 
+@pytest.mark.parametrize("features,n_out", [
+    ([], 0),
+    ([{"type": "Feature", "properties": {"k": 1},
+       "geometry": {"type": "Point", "coordinates": [0, 0]}}], 1),
+], ids=["empty", "int-point"])
+def test_cli_empty_and_integer_coordinate_inputs(tmp_path, features, n_out):
+    """An empty FeatureCollection still writes the requested tile (an
+    empty layer), and integer coordinates parse as doubles."""
+    src = tmp_path / "in.json"
+    src.write_text(json.dumps({"type": "FeatureCollection",
+                               "features": features}))
+    out = tmp_path / "out.mvt"
+    code = ("import sys; from zellige_spark import cli; "
+            "raise SystemExit(cli.main(sys.argv[1:]))")
+    cmd = [sys.executable, "-c", code,
+           "--layer-input", str(src), "--layer-output", str(out),
+           "--layer-name", "pts", "--layer-zoom", "0",
+           "--layer-x", "0", "--layer-y", "0",
+           "--layer-extent", "2048", "--master", "local[2]"]
+    res = subprocess.run(cmd, capture_output=True, text=True, timeout=300,
+                         cwd=os.path.dirname(os.path.dirname(__file__)))
+    assert res.returncode == 0, res.stderr[-2000:]
+    layer = kmvt.decode_tile(out.read_bytes())["pts"]
+    assert layer["name"] == "pts" and layer["extent"] == 2048
+    assert len(layer["features"]) == n_out
+
+
 @_needs(SMALL)
 def test_read_geojson_roundtrip(spark):
-    df = io_geojson.read_geojson(spark, SMALL)
+    df = io_geojson.read_geojson_distributed(spark, SMALL)
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["geom_type"] == "MultiLineString"
@@ -55,7 +82,7 @@ def test_read_geojson_roundtrip(spark):
 
 @_needs(T10056)
 def test_feature_tiles_multipolygon(spark):
-    feats = io_geojson.read_geojson(spark, T10056)
+    feats = io_geojson.read_geojson_distributed(spark, T10056)
     assigned = FT.assign_feature_tiles(feats, zoom=15, extent=2048)
     tiles = FT.assemble_feature_tiles(assigned, layer_name="demo",
                                       extent=2048).toPandas()
@@ -70,7 +97,7 @@ def test_feature_tiles_multipolygon(spark):
 
 @_needs(SMALL)
 def test_feature_tiles_bbox_assignment_covers_kernel_tile(spark):
-    feats = io_geojson.read_geojson(spark, SMALL)
+    feats = io_geojson.read_geojson_distributed(spark, SMALL)
     assigned = FT.assign_feature_tiles(feats, zoom=15, extent=2048)
     keys = {(r["tile_x"], r["tile_y"]) for r in assigned.collect()}
     assert (28999, 19781) in keys

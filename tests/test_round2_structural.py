@@ -1,6 +1,6 @@
-"""Round-2 structural regressions: streaming generic-feature fold
-byte-identity, distributed GeoJSON parity, streaming-refresh replay
-idempotency."""
+"""Round-2 structural regressions: generic-feature tile byte-identity
+against the driver-side kernel reference, distributed GeoJSON parity,
+streaming-refresh replay idempotency."""
 
 import json
 import os
@@ -11,7 +11,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zellige_spark import io_geojson
+from zellige_spark.kernel import pipeline as kpipe
 from zellige_spark.operators import feature_tiles as FT
+
+from .tile_reference import assert_same_tiles, feature_tiles_reference
 
 SMALL = "/root/reference/test/integration/small.json"
 T10056 = "/root/reference/test/integration/10056.json"
@@ -25,37 +28,41 @@ GEOJSON_INPUTS = [os.path.join(DATA, "lines.geojson"),
 
 def _mixed_features(spark):
     """Line + polygon fixtures with globally unique fids (a total order,
-    so grouped and streaming paths see the same feature sequence)."""
+    so the Spark path and the driver reference see the same feature
+    sequence)."""
     feats = reduce(DataFrame.unionByName,
-                   (io_geojson.read_geojson(spark, p) for p in GEOJSON_INPUTS))
+                   (io_geojson.read_geojson_distributed(spark, p)
+                    for p in GEOJSON_INPUTS))
     w = Window.orderBy("geom_type", "props_json")
     return feats.withColumn("fid", F.row_number().over(w).cast("long"))
 
 
 def test_feature_tiles_streaming_matches_grouped(spark):
+    """The grouped Spark feature path is byte-identical to the
+    driver-side kernel reference, tile for tile."""
     feats = _mixed_features(spark)
     assigned = FT.assign_feature_tiles(feats, zoom=15, extent=2048)
     grouped = FT.assemble_feature_tiles(assigned, layer_name="demo",
-                                        extent=2048).toPandas() \
-        .sort_values(["zoom", "tile_x", "tile_y"], ignore_index=True)
-    streamed = FT.assemble_feature_tiles_streaming(
-        assigned, layer_name="demo", extent=2048,
-        num_partitions=3).toPandas() \
-        .sort_values(["zoom", "tile_x", "tile_y"], ignore_index=True)
-    assert len(grouped) == len(streamed) and len(grouped) > 0
-    assert (grouped["feature_count"].to_numpy()
-            == streamed["feature_count"].to_numpy()).all()
-    for a, b in zip(grouped["mvt"], streamed["mvt"]):
-        assert bytes(a) == bytes(b)  # byte-identical strategies
+                                        extent=2048).toPandas()
+    assert_same_tiles(grouped, feature_tiles_reference(
+        assigned, layer_name="demo", extent=2048))
+
+
+def _double_parts(parts):
+    """Kernel parts with every coordinate as a double (the schema type)."""
+    return [[[[float(c) for c in pt] for pt in ring] for ring in part]
+            for part in parts]
 
 
 def test_read_geojson_distributed_parity(spark):
     for path in GEOJSON_INPUTS:
-        drv = {(r["fid"], r["geom_type"], json.dumps(r["parts"]), r["props_json"])
-               for r in io_geojson.read_geojson(spark, path).collect()}
+        with open(path) as fh:
+            kernel = {(f["fid"], f["geom_type"], json.dumps(_double_parts(f["parts"])),
+                       json.dumps(f["props"], sort_keys=True))
+                      for f in kpipe.geojson_to_features(json.load(fh))}
         dist = {(r["fid"], r["geom_type"], json.dumps(r["parts"]), r["props_json"])
                 for r in io_geojson.read_geojson_distributed(spark, path).collect()}
-        assert drv == dist and len(drv) > 0
+        assert kernel == dist and len(kernel) > 0
 
 
 def test_stream_tile_refresh_semijoin_fallback(spark, tmp_path):

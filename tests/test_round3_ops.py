@@ -2,8 +2,6 @@
 count stays O(n) at ~1e5 vectors), the self-verifying ANN recall
 column, and small-corpus behavior preservation."""
 
-import os
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -104,51 +102,6 @@ def test_ann_recall_column_truthful(spark, qname):
     mean_recall = sum(ext.values()) / len(ext)
     floor = 0.9 if qname == "q_ann_lsh" else 0.5
     assert mean_recall >= floor, f"{qname} mean recall {mean_recall}"
-
-
-# ---------------------------------------------------------------------------
-# salted two-phase generic feature tiles: byte-identical to grouped
-# ---------------------------------------------------------------------------
-
-def _mixed_features(spark):
-    """Committed line + polygon fixtures, plus the reference integration
-    inputs wherever that checkout is present."""
-    from functools import reduce
-
-    from pyspark.sql import DataFrame, Window
-    from zellige_spark import io_geojson
-
-    data = os.path.join(os.path.dirname(__file__), "data")
-    reference = ("/root/reference/test/integration/small.json",
-                 "/root/reference/test/integration/10056.json")
-    paths = [os.path.join(data, "lines.geojson"),
-             os.path.join(data, "polygons.geojson"),
-             *(p for p in reference if os.path.exists(p))]
-    feats = reduce(DataFrame.unionByName,
-                   (io_geojson.read_geojson(spark, p) for p in paths))
-    w = Window.orderBy("geom_type", "props_json")
-    return feats.withColumn("fid", F.row_number().over(w).cast("long"))
-
-
-@pytest.mark.parametrize("mode", ["fixed", "auto"])
-def test_feature_tiles_salted_matches_grouped(spark, mode):
-    from zellige_spark.operators import feature_tiles as FT
-
-    feats = _mixed_features(spark)
-    assigned = FT.assign_feature_tiles(feats, zoom=15, extent=2048)
-    grouped = FT.assemble_feature_tiles(assigned, layer_name="demo",
-                                        extent=2048).toPandas() \
-        .sort_values(["zoom", "tile_x", "tile_y"], ignore_index=True)
-    kwargs = ({"salt": 4} if mode == "fixed"
-              else {"auto_rows_per_group": 2})  # tiny cap: every tile salts
-    salted = FT.assemble_feature_tiles_salted(
-        assigned, layer_name="demo", extent=2048, **kwargs).toPandas() \
-        .sort_values(["zoom", "tile_x", "tile_y"], ignore_index=True)
-    assert len(grouped) == len(salted) and len(grouped) > 0
-    assert (grouped["feature_count"].to_numpy()
-            == salted["feature_count"].to_numpy()).all()
-    for a, b in zip(grouped["mvt"], salted["mvt"]):
-        assert bytes(a) == bytes(b)  # byte-identical strategies
 
 
 # --- connected components over near-dup pairs ------------------------------

@@ -15,7 +15,7 @@ LINES = os.path.join(os.path.dirname(__file__), "data", "lines.geojson")
 
 
 # ---------------------------------------------------------------------------
-# fids >= 2^53 survive the pandas boundary exactly in ALL tile strategies
+# fids >= 2^53 survive the pandas boundary exactly in the feature tile path
 # ---------------------------------------------------------------------------
 
 def test_feature_tiles_huge_fids_exact(spark):
@@ -23,13 +23,15 @@ def test_feature_tiles_huge_fids_exact(spark):
     batch holds a null; at 2^60 the float spacing is 256, so BIG/BIG+1/
     BIG+2 would collapse to one value — corrupting both the fid-sorted
     property order and the encoded MVT feature ids.  The miss/value
-    split must keep them exact in every assembly strategy."""
+    split must keep them exact through the Spark feature path."""
     from zellige_spark import io_geojson
     from zellige_spark.kernel import mvt as kmvt
     from zellige_spark.operators import feature_tiles as FT
 
+    from .tile_reference import assert_same_tiles, feature_tiles_reference
+
     src = SMALL if os.path.exists(SMALL) else LINES
-    base = io_geojson.read_geojson(spark, src).collect()[0]
+    base = io_geojson.read_geojson_distributed(spark, src).collect()[0]
     BIG = 2 ** 60
     rows = [(BIG + 2, base["geom_type"], base["parts"], json.dumps({"k": "c"})),
             (BIG + 1, base["geom_type"], base["parts"], json.dumps({"k": "b"})),
@@ -38,19 +40,10 @@ def test_feature_tiles_huge_fids_exact(spark):
     feats = spark.createDataFrame(rows, io_geojson.FEATURES_SCHEMA)
     assigned = FT.assign_feature_tiles(feats, zoom=15, extent=2048)
 
-    def pdf_of(df):
-        return (df.toPandas()
-                  .sort_values(["zoom", "tile_x", "tile_y"], ignore_index=True))
-
-    grouped = pdf_of(FT.assemble_feature_tiles(assigned, layer_name="demo",
-                                               extent=2048))
-    streamed = pdf_of(FT.assemble_feature_tiles_streaming(
-        assigned, layer_name="demo", extent=2048, num_partitions=3))
-    salted = pdf_of(FT.assemble_feature_tiles_salted(
-        assigned, layer_name="demo", extent=2048, salt=3))
-    assert len(grouped) == len(streamed) == len(salted) > 0
-    for a, b, c in zip(grouped["mvt"], streamed["mvt"], salted["mvt"]):
-        assert bytes(a) == bytes(b) == bytes(c)
+    grouped = FT.assemble_feature_tiles(assigned, layer_name="demo",
+                                        extent=2048).toPandas()
+    assert_same_tiles(grouped, feature_tiles_reference(
+        assigned, layer_name="demo", extent=2048))
 
     hit = grouped[grouped["feature_count"] == 4]
     assert len(hit) >= 1

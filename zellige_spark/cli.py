@@ -35,12 +35,13 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     from . import io_geojson
+    from .kernel import pipeline as kpipe
     from .operators import feature_tiles as FT
     from .session import get_spark
 
     spark = get_spark(app="zellige-cli", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
-    feats = io_geojson.read_geojson(spark, args.layer_input)
+    feats = io_geojson.read_geojson_distributed(spark, args.layer_input)
     # single-tile config: assign everything to the requested tile
     from pyspark.sql import functions as F
 
@@ -51,11 +52,18 @@ def main(argv=None) -> int:
         assigned, layer_name=args.layer_name, extent=args.layer_extent,
         buffer=args.layer_buffer, quantize=args.layer_quantize_pixels,
         simplify=args.layer_simplification)
-    row = tiles.collect()[0]
+    rows = tiles.collect()
+    if rows:
+        mvt, n_feats = bytes(rows[0]["mvt"]), rows[0]["feature_count"]
+    else:  # no feature reached the encode: write the empty-layer tile
+        mvt, n_feats = kpipe.encode_features([], kpipe.TileConfig(
+            name=args.layer_name, z=args.layer_zoom, x=args.layer_x,
+            y=args.layer_y, buffer=args.layer_buffer,
+            extent=args.layer_extent, quantize=args.layer_quantize_pixels,
+            simplify=args.layer_simplification)), 0
     with open(args.layer_output, "wb") as f:
-        f.write(bytes(row["mvt"]))
-    print(f"wrote {row['bytes_len']} bytes, {row['feature_count']} features "
-          f"-> {args.layer_output}")
+        f.write(mvt)
+    print(f"wrote {len(mvt)} bytes, {n_feats} features -> {args.layer_output}")
     spark.stop()
     return 0
 

@@ -30,33 +30,12 @@ FEATURES_SCHEMA = T.StructType([
 ])
 
 
-def read_geojson(spark: SparkSession, path: str) -> DataFrame:
-    """Parse GeoJSON FeatureCollection file(s) into the normalized
-    feature DataFrame.  Files parse driver-side (a FeatureCollection is
-    one JSON document — not line-splittable); at scale the engine's
-    input is parquet/Iceberg, this source exists for reference parity."""
-    import glob
-    import os
-
-    paths = sorted(glob.glob(path)) if any(c in path for c in "*?[") else [path]
-    rows: List[tuple] = []
-    for p in paths:
-        with open(p) as f:
-            doc = json.load(f)
-        for feat in kpipe.geojson_to_features(doc):
-            rows.append((feat["fid"], feat["geom_type"], feat["parts"],
-                         json.dumps(feat["props"], sort_keys=True)))
-    return spark.createDataFrame(rows, FEATURES_SCHEMA)
-
-
 def read_geojson_distributed(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed GeoJSON source: each FeatureCollection document is
-    read whole (``spark.read.text(wholetext=True)``, one row per file)
-    and parsed EXECUTOR-side in an Arrow-batched pass — the driver never
-    holds a document.  For a directory of many files this parallelizes
-    across files; use it over :func:`read_geojson` (driver-side, kept
-    for tiny inputs/reference parity) whenever inputs exceed driver
-    memory."""
+    """GeoJSON source: each FeatureCollection document is read whole
+    (``spark.read.text(wholetext=True)``, one row per file) and parsed
+    EXECUTOR-side in an Arrow-batched pass — the driver never holds a
+    document.  For a directory of many files this parallelizes across
+    files; within one file the features keep their document order."""
     import pandas as pd
 
     txt = spark.read.text(path, wholetext=True)

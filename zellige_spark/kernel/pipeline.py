@@ -215,9 +215,8 @@ def stage_feature_cmds(gt, parts):
     simplified feature: (gtype, cmds) with cmds None when the feature
     drops at this stage.  A dropped feature still consumed its feature
     id (convertId runs before int-conversion, GeoJsonToMvt.hs:54-60),
-    which is why drop status must survive to whichever phase assigns
-    counter ids — the salted two-phase generic assembler relies on
-    this being the single source of truth for phase A."""
+    which is why a dropped feature is skipped only after its id is
+    assigned (see ``_encode_staged``)."""
     if gt in POINT_KINDS:
         ipts = kmvt.coords_to_ipoints(np.concatenate([np.asarray(r) for r in parts[0]], axis=0))
         if len(ipts) == 0:
@@ -252,61 +251,6 @@ def _encode_one(gt, fid, props, parts, keys, values,
               else line_feats if gtype == kmvt.GEOM_LINESTRING
               else poly_feats)
     bucket.append(kmvt.encode_feature(fid, tags, gtype, cmds))
-
-
-class StreamingTileEncoder:
-    """Incremental per-tile encoder — the reference's streaming fold
-    (GeoJsonStreamingToMvt.hs:25-57) as an accumulator object.  Each
-    ``add(feature)`` projects, clips, simplifies, and byte-encodes the
-    feature immediately; only the encoded feature records and the
-    key/value dictionaries stay resident, so a tile with millions of
-    line/polygon features costs O(encoded output), not O(raw geometry
-    held as one group).  ``finish()`` emits bytes identical to
-    :func:`encode_features` over the same feature sequence."""
-
-    def __init__(self, cfg: TileConfig):
-        self.cfg = cfg
-        self._bbox = kmerc.tile_bbox(cfg.z, cfg.x, cfg.y)
-        self._window = kclip.buffered_bbox(cfg.buffer, cfg.extent)
-        self._keys = kmvt.DictStore()
-        self._values = kmvt.DictStore()
-        self._point_feats: List[bytes] = []
-        self._line_feats: List[bytes] = []
-        self._poly_feats: List[bytes] = []
-        self._counter = 0
-
-    def add(self, feat: dict) -> None:
-        gt = feat["geom_type"]
-        if gt is None or gt == "NoGeometry":
-            return
-        parts = _project_parts(feat["parts"], self.cfg.extent,
-                               self.cfg.quantize, self._bbox)
-        parts = _clip_feature(gt, parts, self._window)
-        if parts is None:
-            return
-        parts = _simplify_feature(gt, parts, self.cfg.simplify)
-        if parts is None:
-            return
-        fid = feat.get("fid")
-        if fid is None:  # convertId counter-from-1 (GeoJsonToMvt.hs:54-60)
-            self._counter += 1
-            fid = self._counter
-        _encode_one(gt, int(fid), feat.get("props") or {}, parts,
-                    self._keys, self._values,
-                    self._point_feats, self._line_feats, self._poly_feats)
-
-    @property
-    def feature_count(self) -> int:
-        return (len(self._point_feats) + len(self._line_feats)
-                + len(self._poly_feats))
-
-    def finish(self) -> bytes:
-        layer = kmvt.encode_layer(
-            self.cfg.name,
-            self._point_feats + self._line_feats + self._poly_feats,
-            self._keys.items, self._values.items,
-            self.cfg.extent, self.cfg.version)
-        return kmvt.encode_tile([layer])
 
 
 def encode_features_local(features: Iterable[dict], cfg: TileConfig) -> bytes:

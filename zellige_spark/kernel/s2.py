@@ -191,11 +191,6 @@ def cid_pack(face, pos, level):
     return (np.asarray(face, dtype=np.int64) << (2 * level)) + np.asarray(pos, dtype=np.int64)
 
 
-def cid_unpack(cid, level):
-    cid = np.asarray(cid, dtype=np.int64)
-    return cid >> (2 * level), cid & ((np.int64(1) << (2 * level)) - 1)
-
-
 def cell_id_u64(face, pos, level):
     """Classic 64-bit leaf-aligned form: face(3 bits) | pos << shift |
     lsb marker — emitted as uint64 for display/interop."""

@@ -131,12 +131,6 @@ def _char_shingle_arrays(df: DataFrame) -> DataFrame:
             .select("doc_id", F.array_distinct("sh").alias("shs")))
 
 
-def _shingles(df: DataFrame) -> DataFrame:
-    """Distinct (doc_id, char-3-gram shingle) pairs (exploded form)."""
-    return _char_shingle_arrays(df).select(
-        "doc_id", F.explode("shs").alias("shingle"))
-
-
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------

@@ -3,33 +3,23 @@
 The reference encoder is a single-threaded pure function per tile
 (/root/reference/src/Data/Geometry/MapnikVectorTile.hs:30-33,60-68);
 its streaming fold (GeoJsonStreamingToMvt.hs:25-57) is the shape we
-distribute.  Three strategies, all producing IDENTICAL bytes:
+distribute as one Spark path:
 
-1. ``assemble_point_tiles_streaming`` (primary, scale path):
-   ``repartition(tile_key) -> sortWithinPartitions(tile_key, image_id)
-   -> mapInPandas(streaming fold)``.  One shuffle; each task folds its
-   tiles in Arrow-batch-bounded memory — a tile with 10^9 features
-   never materializes as one group (the applyInPandas trap).  This is
-   exactly Spark's sort-based aggregation pattern applied to MVT
-   layers.
-
-2. ``assemble_point_tiles_grouped``: classic
-   ``groupBy(tile).applyInPandas`` — simpler plan, used for small/test
-   scales and as a cross-check oracle.
-
-3. ``assemble_point_tiles_salted``: explicit two-phase for hot tiles
-   (dense urban cells, the north rule's skew case):
-   phase A ``groupBy(tile, salt)`` pre-encodes each feature's
-   expensive bytes (type+geometry varints) map-side; phase B
-   ``groupBy(tile)`` merges sub-groups — a numpy splice of small
-   varints (ids/tags), no re-encoding.  Partial+final aggregation,
-   exactly Spark's two-phase agg applied to MVT layers.
+``assemble_point_tiles_streaming``:
+``repartition(tile_key) -> sortWithinPartitions(tile_key, image_id)
+-> mapInArrow(point_tile_fold)``.  One shuffle; each task folds its
+tiles in Arrow-batch-bounded memory — a tile with 10^9 features never
+materializes as one group (the applyInPandas trap).  This is exactly
+Spark's sort-based aggregation pattern applied to MVT layers.
+``assemble_captioned_tiles_streaming`` is the same shape with a second
+(caption) property.
 
 Determinism: the reference is single-threaded, so its stable order is
 input order.  A distributed engine needs an explicit stable key — we
 sort features by ``image_id`` within each tile; feature ids are then
 1..n in that order (convertId counter semantics, GeoJsonToMvt.hs:54-60).
-All three strategies agree byte-for-byte (tested).
+The Spark path is byte-identical to ``_finish_point_tile`` applied to
+each tile's image_id-sorted rows on the driver (tested).
 
 Feature properties: ``{"image_id": St <id>}`` per feature; dictionary
 tables are first-seen order (= feature order, since ids are unique),
@@ -252,8 +242,8 @@ def _string_values_blob_np(sarr: np.ndarray, slens: np.ndarray) -> tuple:
 
 
 def _string_values_blob(ids) -> tuple:
-    """Value messages for a list of Python strings (grouped/salted and
-    captioned paths; the streaming fold uses the buffer form)."""
+    """Value messages for a list of Python strings (captioned path; the
+    point fold uses the buffer form)."""
     return _string_values_blob_np(*_utf8_cat(ids))
 
 
@@ -294,8 +284,8 @@ def _encode_tile_run_parts(id_data: np.ndarray, id_lens: np.ndarray,
 def _encode_tile_run(ids, px: np.ndarray, py: np.ndarray,
                      tile_starts: np.ndarray, metas,
                      layer_name: str, extent: int):
-    """Row-tuple form of ``_encode_tile_run_parts`` for the grouped /
-    salted strategies (Python-string ids, per-tile bytes objects)."""
+    """Row-tuple form of ``_encode_tile_run_parts`` for callers holding
+    Python-string ids (``_finish_point_tile``), per-tile bytes objects."""
     n = len(px)
     k = len(metas)
     if n == 0 or k == 0:
@@ -324,7 +314,7 @@ def _finish_point_tile(image_ids, px: np.ndarray, py: np.ndarray,
 
 
 # ---------------------------------------------------------------------------
-# strategy 1: streaming fold over sorted partitions (the scale path)
+# streaming fold over sorted partitions
 # ---------------------------------------------------------------------------
 
 def assemble_point_tiles_streaming(assigned: DataFrame, layer_name: str = "images",
@@ -546,154 +536,6 @@ def with_tile_integrity(tiles: DataFrame, layer_name: str = "images",
 
 
 # ---------------------------------------------------------------------------
-# strategy 2: groupBy().applyInPandas (test scale / oracle)
-# ---------------------------------------------------------------------------
-
-def assemble_point_tiles_grouped(assigned: DataFrame, layer_name: str = "images",
-                                 extent: int = 4096, quantize: int = 1,
-                                 buffer: int = 128) -> DataFrame:
-    df = T.tile_local_px(assigned, extent, quantize)
-    w = float(buffer)
-    df = df.filter((F.col("px") >= -w) & (F.col("px") <= extent + w)
-                   & (F.col("py") >= -w) & (F.col("py") <= extent + w))
-    df = df.select("zoom", "tile_x", "tile_y", "image_id", "px", "py")
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("image_id")
-        mvt_bytes = _finish_point_tile(pdf["image_id"].tolist(),
-                                       pdf["px"].to_numpy(), pdf["py"].to_numpy(),
-                                       layer_name, extent)
-        return pd.DataFrame({
-            "zoom": [int(pdf["zoom"].iloc[0])],
-            "tile_x": [int(pdf["tile_x"].iloc[0])],
-            "tile_y": [int(pdf["tile_y"].iloc[0])],
-            "mvt": [mvt_bytes], "feature_count": [len(pdf)],
-            "bytes_len": [len(mvt_bytes)],
-        })
-
-    return df.groupBy("zoom", "tile_x", "tile_y").applyInPandas(encode, TILE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# strategy 3: explicit two-phase with hot-tile salting
-# ---------------------------------------------------------------------------
-
-def plan_salts(assigned: DataFrame, rows_per_group: int = 100_000) -> DataFrame:
-    """Count-based skew scan (SURVEY.md §2.10 hot-tile salting): tiles
-    whose row count exceeds ``rows_per_group`` get ceil(count/target)
-    salt buckets; everything else gets 1.  The result is a small
-    (hot tiles only, plus a default) plan meant to be broadcast-joined.
-
-    Cost: one partial-aggregated count per tile — the same shuffle key
-    the encode itself uses, so AQE can reuse statistics.
-    """
-    counts = assigned.groupBy("tile_key").agg(F.count(F.lit(1)).alias("n"))
-    return (counts.filter(F.col("n") > rows_per_group)
-                  .withColumn("n_salt",
-                              F.ceil(F.col("n") / F.lit(rows_per_group)).cast("int"))
-                  .select("tile_key", "n_salt"))
-
-
-def with_salt(assigned: DataFrame, salt_plan: DataFrame) -> DataFrame:
-    """Attach the salt column: pmod(hash(image_id), n_salt) for hot
-    tiles, 0 elsewhere.  salt_plan is broadcast (it holds hot tiles
-    only)."""
-    df = assigned.join(F.broadcast(salt_plan), "tile_key", "left")
-    n_salt = F.coalesce(F.col("n_salt"), F.lit(1))
-    return (df.withColumn("salt", F.pmod(F.xxhash64("image_id"), n_salt).cast("int"))
-              .drop("n_salt"))
-
-
-_PARTIAL_SCHEMA = ("zoom int, tile_x long, tile_y long, salt int, "
-                   "min_id string, image_ids array<string>, "
-                   "pxs array<double>, pys array<double>")
-
-
-def assemble_point_tiles_salted(assigned: DataFrame, layer_name: str = "images",
-                                extent: int = 4096, quantize: int = 1,
-                                buffer: int = 128, salt: int = 8,
-                                auto_rows_per_group: Optional[int] = None) -> DataFrame:
-    """Two-phase encode: phase A sorts and compacts each (tile, salt)
-    sub-group into one array row — bounding any single task's group to
-    ~1/salt of a hot tile — and phase B merge-sorts the sub-groups and
-    assembles the tile.  The assembly itself is fully vectorized numpy
-    (see _point_feature_blobs), so phase B's cost is proportional to the
-    tile's OUTPUT bytes.
-
-    Produces bytes identical to the other strategies.
-    """
-    df = T.tile_local_px(assigned, extent, quantize)
-    w = float(buffer)
-    df = df.filter((F.col("px") >= -w) & (F.col("px") <= extent + w)
-                   & (F.col("py") >= -w) & (F.col("py") <= extent + w))
-    if auto_rows_per_group:
-        # count-based skew scan: only hot tiles split, others salt=0
-        plan = plan_salts(assigned, auto_rows_per_group)
-        df = with_salt(df.withColumn("tile_key", T.tile_key(
-            F.col("zoom"), F.col("tile_x"), F.col("tile_y"))), plan)
-        df = df.select("zoom", "tile_x", "tile_y", "image_id", "px", "py", "salt")
-    else:
-        df = df.select("zoom", "tile_x", "tile_y", "image_id", "px", "py")
-        df = df.withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)).cast("int"))
-
-    def phase_a(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("image_id")
-        return pd.DataFrame({
-            "zoom": [int(pdf["zoom"].iloc[0])],
-            "tile_x": [int(pdf["tile_x"].iloc[0])],
-            "tile_y": [int(pdf["tile_y"].iloc[0])],
-            "salt": [int(pdf["salt"].iloc[0])],
-            "min_id": [pdf["image_id"].iloc[0]],
-            "image_ids": [pdf["image_id"].tolist()],
-            "pxs": [pdf["px"].tolist()],
-            "pys": [pdf["py"].tolist()],
-        })
-
-    partial = (df.groupBy("zoom", "tile_x", "tile_y", "salt")
-                 .applyInPandas(phase_a, _PARTIAL_SCHEMA))
-
-    def phase_b(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids: List[str] = []
-        pxs: List[float] = []
-        pys: List[float] = []
-        for _, row in pdf.iterrows():
-            ids.extend(row["image_ids"])
-            pxs.extend(row["pxs"])
-            pys.extend(row["pys"])
-        order = np.argsort(np.asarray(ids, dtype=object), kind="stable")
-        ids = [ids[i] for i in order]
-        px = np.asarray(pxs, dtype=np.float64)[order]
-        py = np.asarray(pys, dtype=np.float64)[order]
-        mvt_bytes = _finish_point_tile(ids, px, py, layer_name, extent)
-        return pd.DataFrame({
-            "zoom": [int(pdf["zoom"].iloc[0])],
-            "tile_x": [int(pdf["tile_x"].iloc[0])],
-            "tile_y": [int(pdf["tile_y"].iloc[0])],
-            "mvt": [mvt_bytes], "feature_count": [len(ids)],
-            "bytes_len": [len(mvt_bytes)],
-        })
-
-    return (partial.groupBy("zoom", "tile_x", "tile_y")
-            .applyInPandas(phase_b, TILE_SCHEMA))
-
-
-# ---------------------------------------------------------------------------
-# generic feature tiles (lines/polygons; fixture-parity and raster/vector ops)
-# ---------------------------------------------------------------------------
-
-def encode_geojson_tile(features: list, layer_name: str, z: int, x: int, y: int,
-                        buffer: int = 128, extent: int = 4096, quantize: int = 1,
-                        simplify: str = "none") -> bytes:
-    """Single-tile encode of normalized features via the numpy kernel —
-    the per-group body for arbitrary-geometry tiling jobs."""
-    from ..kernel import pipeline as kpipe
-
-    cfg = kpipe.TileConfig(name=layer_name, z=z, x=x, y=y, buffer=buffer,
-                           extent=extent, quantize=quantize, simplify=simplify)
-    return kpipe.encode_features(features, cfg)
-
-
-# ---------------------------------------------------------------------------
 # multi-layer composition: tile sets merge by BYTE concatenation
 # ---------------------------------------------------------------------------
 
@@ -763,7 +605,7 @@ def tile_layer_stats(tiles: DataFrame) -> DataFrame:
 # The north-rule payload is (image, caption) pairs; these tiles carry
 # the caption through to the wire so a consumer never re-joins the
 # source table.  Kept SEPARATE from the byte-pinned single-property
-# path above (cross-strategy byte-identity tests pin that layout):
+# path above (driver-reference byte-identity tests pin that layout):
 # same vectorized helpers, second key/value stream, per-tile
 # first-seen caption dictionary (kernel/mvt.py DictStore semantics,
 # Types.hs:49-50 St values).

@@ -1,16 +1,15 @@
 """Generic (any-geometry) feature tiling: assign line/polygon features
 to every tile their bbox touches, then encode each tile's features
 through the full reference pipeline (project -> clip -> simplify ->
-MVT) with ``groupBy(tile).applyInPandas``.
+MVT) with one Spark path, ``groupBy(tile).applyInPandas``.  Each
+tile's bytes equal ``kernel.pipeline.encode_features`` over that tile's
+features in miss-first fid order (tested).
 
 This is the distributed form of zellige's whole program for arbitrary
 geometry; the point fast-path lives in operators/encode.py.
 """
 
 from __future__ import annotations
-
-import json
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -129,217 +128,6 @@ def assemble_feature_tiles(assigned: DataFrame, layer_name: str = "layer",
 
     return (_split_exact_fid(assigned).groupBy("zoom", "tile_x", "tile_y")
             .applyInPandas(encode, TILE_SCHEMA))
-
-
-def assemble_feature_tiles_streaming(assigned: DataFrame, layer_name: str = "layer",
-                                     extent: int = 4096, buffer: int = 128,
-                                     quantize: int = 1, simplify: str = "none",
-                                     num_partitions: int = None) -> DataFrame:
-    """Sorted-partition streaming fold for generic geometry — the same
-    shape as encode.assemble_point_tiles_streaming: repartition(tile) ->
-    sortWithinPartitions(tile, fid) -> mapInPandas with a per-tile
-    StreamingTileEncoder.  A giant line/polygon tile never materializes
-    as one pandas group: each feature is clipped + byte-encoded as its
-    Arrow batch streams through, and only encoded records stay resident.
-
-    Byte-identical to assemble_feature_tiles when fids give a total
-    order (test-asserted)."""
-
-    keys = ["zoom", "tile_x", "tile_y"]
-    assigned = _split_exact_fid(assigned)
-    if num_partitions:
-        df = assigned.repartition(num_partitions, *keys)
-    else:
-        df = assigned.repartition(*keys)
-    # desc(_fid_miss) puts misses first — same order the old nullable
-    # sort gave (Spark nulls-first asc), now over exact int64 keys
-    df = df.sortWithinPartitions(*keys, F.desc("_fid_miss"), "fid")
-    cols = ["zoom", "tile_x", "tile_y", "mvt", "feature_count", "bytes_len"]
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        open_key = None
-        enc = None
-
-        def finish():
-            mvt = enc.finish()
-            z, tx, ty = open_key
-            return (z, tx, ty, mvt, enc.feature_count, len(mvt))
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            zs = pdf["zoom"].to_numpy()
-            xs = pdf["tile_x"].to_numpy()
-            ys = pdf["tile_y"].to_numpy()
-            change = np.nonzero((np.diff(zs) != 0) | (np.diff(xs) != 0)
-                                | (np.diff(ys) != 0))[0] + 1
-            bounds = [0, *change.tolist(), len(pdf)]
-            rows = []
-            feats_all = io_geojson.rows_to_features(
-                _restore_exact_fid(pdf, sort=False))
-            for i in range(len(bounds) - 1):
-                lo, hi = bounds[i], bounds[i + 1]
-                key = (int(zs[lo]), int(xs[lo]), int(ys[lo]))
-                if open_key is not None and key != open_key:
-                    rows.append(finish())
-                    enc, open_key = None, None
-                if enc is None:
-                    open_key = key
-                    enc = kpipe.StreamingTileEncoder(kpipe.TileConfig(
-                        name=layer_name, z=key[0], x=key[1], y=key[2],
-                        buffer=buffer, extent=extent,
-                        quantize=quantize, simplify=simplify))
-                for feat in feats_all[lo:hi]:
-                    enc.add(feat)
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-        if enc is not None:
-            yield pd.DataFrame([finish()], columns=cols)
-
-    return df.mapInPandas(fold, TILE_SCHEMA)
-
-
-# fid_miss rides as its own boolean array so the fids list never holds
-# a null: an Arrow list<long> WITH nulls reaches pandas as float64 too,
-# rounding ids >= 2^53 exactly like the top-level column does
-_SALTED_PARTIAL_SCHEMA = (
-    "zoom int, tile_x long, tile_y long, salt int, "
-    "fids array<long>, fid_miss array<boolean>, kinds array<int>, "
-    "cmds array<array<long>>, props array<string>")
-
-
-def assemble_feature_tiles_salted(assigned: DataFrame, layer_name: str = "layer",
-                                  extent: int = 4096, buffer: int = 128,
-                                  quantize: int = 1, simplify: str = "none",
-                                  salt: int = 8,
-                                  auto_rows_per_group: int = None) -> DataFrame:
-    """Hot-tile two-phase encode for GENERIC geometry (the line/polygon
-    analogue of encode.assemble_point_tiles_salted): phase A runs the
-    expensive per-feature work — project, clip, simplify,
-    int-conversion, geometry command build — on each (tile, salt)
-    sub-group, bounding any single task to ~1/salt of a hot tile (a
-    z0-heavy polygon corpus no longer lands on one task).  Phase B
-    merge-sorts the sub-groups by fid and runs only the parts that are
-    inherently tile-global and O(output bytes): counter-id assignment,
-    the first-seen key/value dictionaries, and layer/tile assembly.
-
-    Byte-identical to assemble_feature_tiles when fids give a total
-    order (test-asserted); dropped-at-int-conversion features keep
-    their id slot via ``kernel.pipeline.stage_feature_cmds`` returning
-    cmds=None (stored as an empty array).
-
-    With ``auto_rows_per_group`` set, a count-based skew scan salts
-    ONLY tiles above that row count (everything else salt=0), so the
-    two-phase overhead is paid exactly where the skew is."""
-    keys = ["zoom", "tile_x", "tile_y"]
-    assigned = _split_exact_fid(assigned)
-    if auto_rows_per_group:
-        counts = assigned.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-        plan = (counts.filter(F.col("_n") > auto_rows_per_group)
-                      .withColumn("_n_salt", F.ceil(F.col("_n") / F.lit(auto_rows_per_group))
-                                   .cast("int"))
-                      .select(*keys, "_n_salt"))
-        df = assigned.join(F.broadcast(plan), keys, "left")
-        n_salt = F.coalesce(F.col("_n_salt"), F.lit(1))
-        df = (df.withColumn("salt", F.pmod(F.coalesce(F.xxhash64("fid"), F.lit(0)), n_salt)
-                             .cast("int"))
-                .drop("_n", "_n_salt"))
-    else:
-        df = assigned.withColumn(
-            "salt", F.pmod(F.coalesce(F.xxhash64("fid"), F.lit(0)), F.lit(salt)).cast("int"))
-
-    def phase_a(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = _restore_exact_fid(pdf, sort=True)
-        z = int(pdf["zoom"].iloc[0])
-        tx = int(pdf["tile_x"].iloc[0])
-        ty = int(pdf["tile_y"].iloc[0])
-        cfg = kpipe.TileConfig(name=layer_name, z=z, x=tx, y=ty,
-                               buffer=buffer, extent=extent,
-                               quantize=quantize, simplify=simplify)
-        bbox = kpipe.kmerc.tile_bbox(z, tx, ty)
-        window = kpipe.kclip.buffered_bbox(buffer, extent)
-        fids, fid_miss, kinds, cmds_out, props = [], [], [], [], []
-        for feat, pjson in zip(io_geojson.rows_to_features(pdf),
-                               pdf["props_json"].tolist()):
-            gt = feat["geom_type"]
-            if gt is None or gt == "NoGeometry":
-                continue
-            parts = kpipe._project_parts(feat["parts"], cfg.extent,
-                                         cfg.quantize, bbox)
-            parts = kpipe._clip_feature(gt, parts, window)
-            if parts is None:
-                continue
-            parts = kpipe._simplify_feature(gt, parts, cfg.simplify)
-            if parts is None:
-                continue
-            gtype, cmds = kpipe.stage_feature_cmds(gt, parts)
-            fids.append(0 if feat["fid"] is None else int(feat["fid"]))
-            fid_miss.append(feat["fid"] is None)
-            kinds.append(int(gtype))
-            cmds_out.append([] if cmds is None else [int(x) for x in cmds])
-            props.append(pjson)
-        return pd.DataFrame({
-            "zoom": [z], "tile_x": [tx], "tile_y": [ty],
-            "salt": [int(pdf["salt"].iloc[0])],
-            "fids": [fids], "fid_miss": [fid_miss], "kinds": [kinds],
-            "cmds": [cmds_out], "props": [props],
-        })
-
-    partial = (df.groupBy("zoom", "tile_x", "tile_y", "salt")
-                 .applyInPandas(phase_a, _SALTED_PARTIAL_SCHEMA))
-
-    from ..kernel import mvt as kmvt
-
-    def phase_b(pdf: pd.DataFrame) -> pd.DataFrame:
-        fids, miss_l, kinds, cmds_all, props = [], [], [], [], []
-        for r in pdf.itertuples(index=False):
-            fids.extend(r.fids)
-            miss_l.extend(r.fid_miss)
-            kinds.extend(r.kinds)
-            cmds_all.extend(r.cmds)
-            props.extend(r.props)
-        # fid-sorted merge, missing fids first (the grouped path's
-        # na_position="first"); fids must be a total order for
-        # determinism, same contract as the streaming fold.  The miss
-        # flag rides separately so the fids list is null-free and stays
-        # exact int64 through Arrow (a list WITH nulls arrives float64,
-        # collapsing distinct ids above 2^53 into arrival-order ties).
-        miss = np.asarray(miss_l, dtype=bool)
-        fvals = np.asarray([int(f) for f in fids], dtype=np.int64)
-        order = np.lexsort((fvals, (~miss).astype(np.int8)))
-        keys_s = kmvt.DictStore()
-        values_s = kmvt.DictStore()
-        buckets = {kmvt.GEOM_POINT: [], kmvt.GEOM_LINESTRING: [],
-                   kmvt.GEOM_POLYGON: []}
-        counter = 0
-        for i in order:
-            if miss[i]:
-                counter += 1
-                fid = counter
-            else:
-                fid = int(fvals[i])
-            if len(cmds_all[i]) == 0:  # int-conversion drop: id consumed, no output
-                continue
-            vals = kmvt.convert_props(json.loads(props[i]))
-            tags = kmvt.build_tags(vals, keys_s, values_s)
-            buckets[int(kinds[i])].append(kmvt.encode_feature(
-                int(fid), tags, int(kinds[i]),
-                np.asarray(cmds_all[i], dtype=np.uint64)))
-        feats = (buckets[kmvt.GEOM_POINT] + buckets[kmvt.GEOM_LINESTRING]
-                 + buckets[kmvt.GEOM_POLYGON])
-        layer = kmvt.encode_layer(layer_name, feats, keys_s.items,
-                                  values_s.items, extent)
-        mvt_bytes = kmvt.encode_tile([layer])
-        return pd.DataFrame({
-            "zoom": [int(pdf["zoom"].iloc[0])],
-            "tile_x": [int(pdf["tile_x"].iloc[0])],
-            "tile_y": [int(pdf["tile_y"].iloc[0])],
-            "mvt": [mvt_bytes], "feature_count": [len(feats)],
-            "bytes_len": [len(mvt_bytes)],
-        })
-
-    return (partial.groupBy("zoom", "tile_x", "tile_y")
-            .applyInPandas(phase_b, TILE_SCHEMA))
 
 
 def _count_features(tile_bytes: bytes) -> int:

@@ -60,14 +60,6 @@ def ray_cast_mask(px: np.ndarray, py: np.ndarray, rings: List[np.ndarray]) -> np
     return inside
 
 
-def ray_cast_mask_pairs(px, py, ring_list) -> np.ndarray:
-    """Row-wise variant: point i tested against ring_list[i]."""
-    out = np.zeros(len(px), dtype=bool)
-    for i in range(len(px)):
-        out[i] = bool(ray_cast_mask(px[i:i + 1], py[i:i + 1], ring_list[i])[0])
-    return out
-
-
 class _EdgeTable:
     """Driver-side preprocessed polygon edge table (CSR layout): all
     rings' edges concatenated with per-polygon offsets.  Captured in

@@ -120,13 +120,6 @@ def with_s2_cell(df: DataFrame, level: int, lon_col: str = "lon",
             F.lit(-1).cast("long")))
 
 
-def cid_at_level(cid: Column, from_level: int, to_level: int) -> Column:
-    """Coarsen a compact cid (Hilbert prefix property: parent == cid>>2)."""
-    if to_level > from_level:
-        raise ValueError("can only coarsen")
-    return F.shiftright(cid, 2 * (from_level - to_level))
-
-
 # --- DuckDB oracle twin ----------------------------------------------------
 
 def sql_s2_cell_cte(source_cte: str, level: int, keep_cols: str) -> str:

@@ -370,8 +370,9 @@ def q_tile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the auditable exact twin, and its plan is the right shape
     anyway: one shuffle on the tile key, then aggregate-only math.
     Per-tile value counts are bounded by tile occupancy (no global
-    sort); a hot tile degrades to one fat window partition, which is
-    where the salting machinery (encode.py) would kick in at 100 TB."""
+    sort); a hot tile degrades to one fat window partition (no hot-tile
+    splitting here; ``tiles.quadtree_split`` is the balanced partition
+    map a 100-TB job would range-partition on)."""
     from pyspark.sql.window import Window
 
     pts = _customer_points(spark, sf_dir)

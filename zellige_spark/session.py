@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 
 def get_spark(app: str = "zellige-spark", master: str = None,
               shuffle_partitions: int = None, extra: dict = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = cpus if cpus != "*" else os.cpu_count()
